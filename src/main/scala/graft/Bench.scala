@@ -64,24 +64,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // size scan splits to the benched SF (SURVEY §5: fit
-      // maxPartitionBytes to the data): the sf0.1 files are all <11 MB, so
-      // the 128 MB default serializes every map stage onto one core. 4 MB
-      // keeps splits big enough to amortize task setup while letting the
-      // 32 threads work. Production-scale files use the default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "4m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", cpus)
+    // size scan splits to the benched SF (SURVEY §5: fit
+    // maxPartitionBytes to the data): the sf0.1 files are all <11 MB, so
+    // the 128 MB default serializes every map stage onto one core. 4 MB
+    // keeps splits big enough to amortize task setup while letting the
+    // 32 threads work. Production-scale files use the default.
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "4m"))
 
     /** One timed execution. A failure is NOT a time: time-to-exception on
       * a broken query (0.06-0.22 s for an analysis error) is
@@ -204,11 +194,13 @@ object Bench {
           // adjudicating against 8-core minima — a different performance
           // regime (8c is FASTER on many barrier-bound rows at sf0.1).
           // The artifact now records its core count; a standing map
-          // whose cpus differ from this run's is not a valid reference
-          // and the adjudication protocol is skipped outright.
+          // whose cpus differ from this run's — or that records none, an
+          // unknown regime — is not a valid reference and the
+          // adjudication protocol is skipped outright.
           val standingCpus = root.path("cpus")
-          if (!standingCpus.isMissingNode && standingCpus.asInt() != cpus.toInt) {
-            System.err.println(s"[bench] standing map is cpus=${standingCpus.asInt()}, " +
+          if (standingCpus.isMissingNode || standingCpus.asInt() != cpus.toInt) {
+            val was = if (standingCpus.isMissingNode) "unknown" else standingCpus.asInt().toString
+            System.err.println(s"[bench] standing map is cpus=$was, " +
               s"this run is cpus=$cpus: skipping standing adjudication")
             Map.empty
           } else {

@@ -5,14 +5,36 @@ import org.apache.spark.sql.functions._
 
 /** Single place that knows how to load the star-schema parquet tables.
   *
-  * All loads are plain `spark.read.parquet` so Catalyst gets full
+  * All loads are plain parquet scans so Catalyst gets full
   * pushdown/pruning; callers project and filter declaratively and the
   * parquet scan only materializes what survives (`PushedFilters` /
   * `ReadSchema` in explain output).
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred table schemas, memoized per (path, [[snapshot]]) — the
+    * [[tableCount]] key — plus the nanosAsLong setting that changes what
+    * inference returns for `events`. Schema inference is a one-task Spark
+    * job reading a footer; a table whose files did not change has the
+    * same schema, so only its first load in the JVM pays it. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // a missing path keeps the reader's own "path does not exist" error
+    val key = if (new java.io.File(path).exists) Some(s"$path@${snapshot(path)}" +
+      s"@${spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")}") else None
+    key.flatMap(k => Option(schemaMemo.get(k))) match {
+      case Some(known) => spark.read.schema(known).parquet(path)
+      case None =>
+        // the inference job runs outside the map (a job inside
+        // computeIfAbsent would block every thread hashing to the same
+        // bin); a racing duplicate inference is idempotent
+        val df = spark.read.parquet(path)
+        key.foreach(schemaMemo.putIfAbsent(_, df.schema))
+        df
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

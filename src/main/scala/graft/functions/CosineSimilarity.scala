@@ -229,11 +229,16 @@ object GraftFunctions {
     ("int_pow_root", classOf[IntegerPowRoot].getName, intPowRootBuilder))
 
   /** Idempotent runtime SQL registration on an existing session (the driver
-    * owns session construction, so extensions alone aren't enough). */
+    * owns session construction, so extensions alone aren't enough). A name
+    * already bound to this very builder is left as it is: the vector paths
+    * register on every call, and a replace logs one WARN line per function.
+    * Any other binding — Spark's own `bloom_filter_agg` included — is
+    * replaced, as before. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

@@ -185,14 +185,18 @@ object GovernanceOps {
     *     dedup_exact rule),
     *   - `token_start`: the doc's position in the packed training
     *     manifest (the prefix sum needs the FULL corpus — a subject's
-    *     position depends on every predecessor — so this is the one
-    *     corpus-priced column; the rest compute on the request-sized
-    *     slice).
+    *     position depends on every predecessor). The column reads the
+    *     manifest a training pipeline already holds
+    *     ([[graft.text.TextOps.cachedPackedManifest]], session-cached and
+    *     shared with the forget audits), so the entry does not price the
+    *     pack. The cache pins a corpus-row-sized block set for the
+    *     session — at scale the large-intermediate case for which
+    *     [[graft.SessionCache]] advises a persisted table instead.
     *
     * Scale shape: requests broadcast; the chunker and classifier run on
-    * the SEMI-JOINED (request-sized) slice only; the dedup election and
-    * the pack are one linear corpus pass each; the final assembly is
-    * request-sized left joins. */
+    * the SEMI-JOINED (request-sized) slice only; the dedup election is
+    * the entry's one linear corpus pass (the pack is built once per
+    * session, above); the final assembly is request-sized left joins. */
   def qGdprAccessReport(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._

@@ -1096,11 +1096,24 @@ object SimilarityOps {
     * codebook — exactly the state a build-once/serve-many deployment
     * writes at index time and every serving session loads
     * ([[graft.sources.AnnIndexStore]] is the parquet round-trip). */
-  final case class IvfPqIndex(
-      cells: DataFrame,
-      withCodes: DataFrame,
-      codebook: Array[Array[Array[Double]]],
-      nCells: Int)
+  final case class IvfPqIndex(quantizer: Quantizer, withCodes: DataFrame) {
+    def cells: DataFrame = quantizer.cells
+    def codebook: Array[Array[Array[Double]]] = quantizer.codebook
+    def nCells: Int = quantizer.nCells
+  }
+
+  /** The frozen half of an [[IvfPqIndex]]: the probe-able cell table,
+    * the residual PQ codebook and the cell count — immutable once built.
+    * `cellVectors` is the cell table on the driver (the serve path's T2
+    * input), collected on first use and then held by this value, so a
+    * caller that keeps one quantizer across serves (the
+    * [[graft.sources.AnnIndexStore]] per-build state) pays that job once. */
+  final class Quantizer(val cells: DataFrame,
+      val codebook: Array[Array[Array[Double]]], val nCells: Int) {
+    lazy val cellVectors: Seq[(Int, Seq[Double])] =
+      cells.select("cell", "cvec").collect().toSeq
+        .map(r => (r.getInt(0), r.getSeq[Double](1)))
+  }
 
   /** Session-built index from the corpus at `dir` (every piece served
     * from [[SessionCache]] / per-dir memos, so repeated calls are free). */
@@ -1117,7 +1130,7 @@ object SimilarityOps {
       spark, "graft_pq_index", dir)(
       assigned.filter(col("vec_id") < PlantedIdOffset).select("vec_id", "cell")
         .join(pqCodes(spark, dir), "vec_id"))
-    IvfPqIndex(cells, withCodes, pqCodebook(spark, dir), kCells)
+    IvfPqIndex(new Quantizer(cells, pqCodebook(spark, dir), kCells), withCodes)
   }
 
   def annTopkIvfPqRanked(spark: SparkSession, dir: String,
@@ -1208,10 +1221,7 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     val t2 = broadcast(
-      pqT2Rows(
-        cells.select(col("cell"), col("cvec")).as[(Int, Seq[Double])].collect().toSeq,
-        idx.codebook, sub)
-        .toDF("cell", "t2"))
+      pqT2Rows(idx.quantizer.cellVectors, idx.codebook, sub).toDF("cell", "t2"))
     val cb = codebookDf(spark, idx.codebook).select(col("block"),
       col("cell").as("code"), col("cvec").as("codevec"))
     val t3 = subBlocks(queries, "qvec", sub)
@@ -1316,12 +1326,7 @@ object SimilarityOps {
     // separate plans, each re-running the corpus scan + filter.
     val batch = appendBatch(spark, dir).localCheckpoint()
     graft.sources.AnnIndexStore.write(spark, dir, path)
-    // the ingest client holds the loaded index across appends (cells +
-    // codebook are frozen at write) instead of re-collecting the
-    // codebook per batch; serve below still reloads from the STORE —
-    // that reload is the entry's point
-    val loaded = graft.sources.AnnIndexStore.read(spark, dir, path)
-    graft.sources.AnnIndexStore.append(spark, dir, path, batch, Some(loaded))
+    graft.sources.AnnIndexStore.append(spark, dir, path, batch)
     val ranked = graft.sources.AnnIndexStore.serve(spark, dir, path, st)
     val truth = bruteTruthTop10(spark, dir, st, Some(batch))
       .select(col("query_id"), col("vec_id"), lit(true).as("in_brute"))
@@ -1374,11 +1379,8 @@ object SimilarityOps {
     val surviving = batch.filter(srcId % 50 === 0)
     val retracted = batch.filter(srcId % 50 === 25)
     graft.sources.AnnIndexStore.write(spark, dir, path)
-    // the client holds the loaded index across both appends (the
-    // qAnnIndexServe note); the post-maintenance serve reloads the store
-    val loaded = graft.sources.AnnIndexStore.read(spark, dir, path)
-    graft.sources.AnnIndexStore.append(spark, dir, path, surviving, Some(loaded))
-    graft.sources.AnnIndexStore.append(spark, dir, path, retracted, Some(loaded))
+    graft.sources.AnnIndexStore.append(spark, dir, path, surviving)
+    graft.sources.AnnIndexStore.append(spark, dir, path, retracted)
     val fragsBefore = graft.sources.AnnIndexStore.codesFragments(path)
     graft.sources.AnnIndexStore.compactIndexFiles(spark, dir, path, targetFiles = 2)
     val fragsAfter = graft.sources.AnnIndexStore.codesFragments(path)
@@ -1530,10 +1532,7 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     val t2 = broadcast(
-      pqT2Rows(
-        cells.select(col("cell"), col("cvec")).as[(Int, Seq[Double])].collect().toSeq,
-        idx.codebook, sub)
-        .toDF("cell", "t2"))
+      pqT2Rows(idx.quantizer.cellVectors, idx.codebook, sub).toDF("cell", "t2"))
 
     // 2+3c. candidates inherit T3 through the cell join; ADC is computed
     // in the same stage, so the only thing that ever shuffles on

@@ -2,9 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.similarity.SimilarityOps
-import graft.similarity.SimilarityOps.IvfPqIndex
+import graft.similarity.SimilarityOps.{IvfPqIndex, Quantizer}
 
 /** Cross-SESSION persistence for the IVF+PQ serving index — the piece
   * that turns the per-JVM [[graft.SessionCache]] build-once/serve-many
@@ -38,12 +39,36 @@ import graft.similarity.SimilarityOps.IvfPqIndex
   * loudly on mismatch — serving from an index built over a different
   * corpus returns silently-wrong neighbors, the worst failure mode an
   * ANN store can have. Pass `allowStale = true` only for forensics.
+  *
+  * State held per build: every file set is read with the schema the
+  * store writes (no inference job), and the frozen quantizer — the cells
+  * frame, the collected codebook and, after the first serve, the
+  * collected cell vectors — is held per path for the JVM, keyed by the
+  * session and the file state of `cells.parquet` and `codebook.parquet`.
+  * A rebuild ([[write]]) rewrites both under new part-file names, which
+  * changes the key; appends, compaction and retraction never touch them.
+  * The codes and appended-vector frames are re-listed on every call, and
+  * the staleness gate runs on every [[read]].
   */
 object AnnIndexStore {
 
   private def metaPath(path: String) = java.nio.file.Paths.get(path, "meta.json")
   private def codesDir(path: String, gen: Int) = s"$path/codes-g$gen.parquet"
   private def appendedDir(path: String, gen: Int) = s"$path/appended_vectors-g$gen.parquet"
+  private def cellsDir(path: String) = s"$path/cells.parquet"
+  private def codebookDir(path: String) = s"$path/codebook.parquet"
+
+  /** Declared schemas of the store's file sets (the StoreFiles contract). */
+  private val CellsSchema = StructType(Seq(StructField("cell", IntegerType),
+    StructField("cvec", ArrayType(DoubleType)), StructField("cnorm", DoubleType)))
+  private val CodesSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("cell", IntegerType), StructField("codes", ArrayType(IntegerType))))
+  private val AppendedSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("vec", ArrayType(DoubleType))))
+  private val CodebookSchema = StructType(Seq(StructField("block", IntegerType),
+    StructField("code", IntegerType), StructField("cvec", ArrayType(DoubleType))))
+  private[graft] val Schemas: Map[String, StructType] = Map("cells" -> CellsSchema,
+    "codes" -> CodesSchema, "appended_vectors" -> AppendedSchema, "codebook" -> CodebookSchema)
 
   private def deleteRecursively(f: java.io.File): Unit =
     if (f.exists) {
@@ -95,14 +120,16 @@ object AnnIndexStore {
     // cells are quantizer-sized (~sqrt(corpus) rows): one file, so every
     // later read()/serve()/append() lists and scans one task instead of
     // one per build partition (§6 small files)
-    idx.cells.coalesce(1).write.mode("overwrite").parquet(s"$path/cells.parquet")
-    idx.withCodes.write.mode("overwrite").parquet(codesDir(path, 0))
+    StoreFiles.conform(idx.cells, CellsSchema)
+      .coalesce(1).write.mode("overwrite").parquet(cellsDir(path))
+    StoreFiles.conform(idx.withCodes, CodesSchema)
+      .write.mode("overwrite").parquet(codesDir(path, 0))
     val spark2 = spark
     import spark2.implicits._
-    idx.codebook.zipWithIndex.flatMap { case (cells, b) =>
+    StoreFiles.conform(idx.codebook.zipWithIndex.flatMap { case (cells, b) =>
       cells.zipWithIndex.map { case (c, k) => (b, k, c.toSeq) }
-    }.toSeq.toDF("block", "code", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook.parquet")
+    }.toSeq.toDF("block", "code", "cvec"), CodebookSchema)
+      .coalesce(1).write.mode("overwrite").parquet(codebookDir(path))
     writeMeta(path, Meta(graft.Tables.snapshot(s"$dataDir/embeddings.parquet"),
       idx.nCells, idx.codebook.length, idx.codebook.head.length, 0, 0))
   }
@@ -118,19 +145,34 @@ object AnnIndexStore {
           s"(stored snapshot ${meta.snapshot}, live $liveSnap) — serving it would " +
           "return wrong neighbors; rebuild with write(), or pass " +
           "allowStale=true for forensics only")
-    val cbRows = spark.read.parquet(s"$path/codebook.parquet")
-      .select("block", "code", "cvec").collect()
-    require(cbRows.length == meta.blocks * meta.codes,
-      s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${meta.blocks * meta.codes}")
-    val codebook = Array.ofDim[Array[Double]](meta.blocks, meta.codes)
-    cbRows.foreach { r =>
-      codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+    IvfPqIndex(quantizer(spark, path, meta),
+      spark.read.schema(CodesSchema).parquet(codesDir(path, meta.gen)))
+  }
+
+  private final case class Held(spark: SparkSession, build: String, q: Quantizer)
+  private val held = new java.util.concurrent.ConcurrentHashMap[String, Held]()
+
+  /** The store's frozen quantizer, loaded once per (session, build) and
+    * then held: the codebook and cell rows cannot change until a rebuild,
+    * and a rebuild changes `build` (new part files under new names). */
+  private def quantizer(spark: SparkSession, path: String, meta: Meta): Quantizer = {
+    val build = graft.Tables.snapshot(cellsDir(path)) + "/" +
+      graft.Tables.snapshot(codebookDir(path))
+    val h = held.get(path)
+    if (h != null && (h.spark eq spark) && h.build == build) h.q
+    else {
+      val cbRows = spark.read.schema(CodebookSchema).parquet(codebookDir(path)).collect()
+      require(cbRows.length == meta.blocks * meta.codes,
+        s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${meta.blocks * meta.codes}")
+      val codebook = Array.ofDim[Array[Double]](meta.blocks, meta.codes)
+      cbRows.foreach { r =>
+        codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+      }
+      val q = new Quantizer(spark.read.schema(CellsSchema).parquet(cellsDir(path)),
+        codebook, meta.nCells)
+      held.put(path, Held(spark, build, q))
+      q
     }
-    IvfPqIndex(
-      spark.read.parquet(s"$path/cells.parquet"),
-      spark.read.parquet(codesDir(path, meta.gen)),
-      codebook,
-      meta.nCells)
   }
 
   /** Serve top-k from a LOADED index (queries + exact-rerank vectors
@@ -140,11 +182,7 @@ object AnnIndexStore {
     * rerank cannot resolve would otherwise be dropped silently). */
   def serve(spark: SparkSession, dataDir: String, path: String,
       queryStride: Long = 1L): DataFrame = {
-    val gen = readMeta(path).gen
-    val appended = new java.io.File(appendedDir(path, gen))
-    val extra =
-      if (appended.exists) Some(spark.read.parquet(appended.getPath))
-      else None
+    val extra = liveAppended(spark, path, readMeta(path).gen)
     SimilarityOps.ivfPqServe(spark, dataDir, queryStride,
       read(spark, dataDir, path), extra)
   }
@@ -162,19 +200,8 @@ object AnnIndexStore {
     * so a rebuild-vs-append decision stays visible in `meta.json`
     * (`appended` count). */
   def append(spark: SparkSession, dataDir: String, path: String,
-      batch0: DataFrame): Unit =
-    append(spark, dataDir, path, batch0, None)
-
-  /** [[append]] with an optionally pre-LOADED index — the real client
-    * shape: a serving/ingest process holds the loaded quantizer
-    * (cells + codebook are immutable after write()) and appends many
-    * batches against it, instead of re-collecting the codebook from
-    * parquet per batch. The caller is responsible for having loaded it
-    * via [[read]] against the same store (which runs the staleness
-    * gate). */
-  private[graft] def append(spark: SparkSession, dataDir: String,
-      path: String, batch0: DataFrame, preloaded: Option[IvfPqIndex]): Unit = {
-    val idx = preloaded.getOrElse(read(spark, dataDir, path))
+      batch0: DataFrame): Unit = {
+    val idx = read(spark, dataDir, path)
     val meta = readMeta(path)
     // Evaluate the batch ONCE, with the appended-vectors STORE as the
     // materialization: the vectors write lands (vec_id, vec), the encode
@@ -192,31 +219,16 @@ object AnnIndexStore {
     // orphan CODES (an ADC-ranked candidate the rerank cannot resolve is
     // dropped silently — the exact failure [[serve]]'s union exists to
     // prevent).
-    val vDir = appendedDir(path, meta.gen)
-    val before = partFiles(vDir)
-    val obs = org.apache.spark.sql.Observation()
-    batch0.select(col("vec_id"), col("vec"))
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("append").parquet(vDir)
-    val appendedN = obs.get("n").asInstanceOf[Long]
-    val newFiles = (partFiles(vDir) -- before).toSeq.sorted.map(f => s"$vDir/$f")
+    val (appendedN, newFiles) = StoreFiles.appendCounted(batch0, AppendedSchema,
+      appendedDir(path, meta.gen), s"AnnIndexStore at $path")
     // an empty batch writes no part files and has nothing to encode
     if (newFiles.nonEmpty) {
-      val batch = spark.read.parquet(newFiles: _*)
-      SimilarityOps.encodeWithIndex(spark, batch, idx)
+      val batch = spark.read.schema(AppendedSchema).parquet(newFiles: _*)
+      StoreFiles.conform(SimilarityOps.encodeWithIndex(spark, batch, idx), CodesSchema)
         .write.mode("append").parquet(codesDir(path, meta.gen))
     }
     writeMeta(path, meta.copy(appended = meta.appended + appendedN))
   }
-
-  /** part-file names currently in a store directory — [[append]] uses a
-    * before/after listing diff to read back exactly the rows one append
-    * produced (single writer per index path by contract). */
-  private def partFiles(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
 
   /** Publish generation gen+1 from the given frames (appended may be
     * None when the store has no appended set), then drop the old
@@ -237,7 +249,7 @@ object AnnIndexStore {
   private def liveAppended(spark: SparkSession, path: String,
       gen: Int): Option[DataFrame] = {
     val d = new java.io.File(appendedDir(path, gen))
-    if (d.exists) Some(spark.read.parquet(d.getPath)) else None
+    if (d.exists) Some(spark.read.schema(AppendedSchema).parquet(d.getPath)) else None
   }
 
   /** OPTIMIZE for the index: rewrite the live codes (and appended
@@ -248,7 +260,7 @@ object AnnIndexStore {
       targetFiles: Int = 4): Unit = {
     val meta = readMeta(path)
     publishGeneration(path, meta,
-      spark.read.parquet(codesDir(path, meta.gen)),
+      spark.read.schema(CodesSchema).parquet(codesDir(path, meta.gen)),
       liveAppended(spark, path, meta.gen), targetFiles)
   }
 
@@ -268,7 +280,7 @@ object AnnIndexStore {
     val meta = readMeta(path)
     val ids = vecIds.select("vec_id")
     publishGeneration(path, meta,
-      spark.read.parquet(codesDir(path, meta.gen))
+      spark.read.schema(CodesSchema).parquet(codesDir(path, meta.gen))
         .join(broadcast(ids), Seq("vec_id"), "left_anti")
         .select("vec_id", "cell", "codes"),
       liveAppended(spark, path, meta.gen).map(
@@ -287,9 +299,6 @@ object AnnIndexStore {
   /** Parquet fragment count of the live codes store — the maintenance
     * health metric [[compactIndexFiles]] exists to bound. */
   def codesFragments(path: String): Int = {
-    val gen = readMeta(path).gen
-    Option(new java.io.File(codesDir(path, gen)).listFiles)
-      .getOrElse(Array.empty)
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    StoreFiles.partFiles(codesDir(path, readMeta(path).gen)).size
   }
 }

@@ -183,4 +183,32 @@ class AnnIndexStoreSpec extends SparkSpec {
       assert(appendOk, s"query $q: appended exact-copy twin not served at rank 2")
     }
   }
+
+  test("a warm store builds its serve frame with no Spark job; a rebuild reloads the quantizer") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_warm").toString
+    AnnIndexStore.write(spark, SfDir, dir)
+    val held = AnnIndexStore.read(spark, SfDir, dir).quantizer
+    AnnIndexStore.append(spark, SfDir, dir,
+      SimilarityOps.appendBatch(spark, SfDir).limit(3))
+    val first = AnnIndexStore.serve(spark, SfDir, dir).collect().toSeq
+    val (again, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+      AnnIndexStore.serve(spark, SfDir, dir))
+    assert(jobs == 0, s"building a serve on an unchanged store ran $jobs Spark jobs")
+    assert(again.collect().toSeq == first)
+    // appends leave the frozen quantizer held; a rebuild replaces it
+    AnnIndexStore.append(spark, SfDir, dir, SimilarityOps.appendBatch(spark, SfDir).limit(1)
+      .select((col("vec_id") + 5000000L).as("vec_id"), col("vec")))
+    assert(AnnIndexStore.read(spark, SfDir, dir).quantizer eq held)
+    AnnIndexStore.write(spark, SfDir, dir)
+    assert(AnnIndexStore.read(spark, SfDir, dir).quantizer ne held,
+      "a rebuild kept serving the previous build's quantizer")
+  }
+
+  test("every store file set matches the schema the store declares for it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_schemas").toString
+    AnnIndexStore.write(spark, SfDir, dir)
+    AnnIndexStore.append(spark, SfDir, dir,
+      SimilarityOps.appendBatch(spark, SfDir).limit(3))
+    assertDeclaredSchemas(dir, AnnIndexStore.Schemas)
+  }
 }

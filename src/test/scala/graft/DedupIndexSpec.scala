@@ -111,4 +111,19 @@ class DedupIndexSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("DIFFERENT corpus"))
   }
+
+  test("a warm store builds its probe frame with no Spark job; files match the declared schemas") {
+    val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
+    val cls = col("doc_id") % 7
+    val p = freshPath("warm")
+    DedupIndexStore.write(spark, SfDir, p, docs.filter(cls =!= 3 && cls =!= 5))
+    DedupIndexStore.append(spark, SfDir, p, docs.filter(cls === 5))
+    val probes = docs.filter(cls === 3)
+    val first = DedupIndexStore.probe(spark, SfDir, p, probes).collect().toSet
+    val (again, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+      DedupIndexStore.probe(spark, SfDir, p, probes))
+    assert(jobs == 0, s"building a probe on an unchanged store ran $jobs Spark jobs")
+    assert(again.collect().toSet == first)
+    assertDeclaredSchemas(p, DedupIndexStore.Schemas)
+  }
 }

@@ -8,17 +8,28 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val SfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(getClass.getSimpleName, cpus = "4")
 
   override def afterAll(): Unit = {
     // one JVM per sbt test run (fork := true); keep the session for speed
     super.afterAll()
+  }
+
+  /** An index store reads its file sets with the schemas it declares, so
+    * each set under `dir` (named `<set>.parquet` or `<set>-g<gen>.parquet`)
+    * must hold exactly the declared columns and types, and every declared
+    * set must be there. */
+  def assertDeclaredSchemas(dir: String,
+      declared: Map[String, org.apache.spark.sql.types.StructType]): Unit = {
+    val sets = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+      .map(d => d.getName.takeWhile(c => c != '-' && c != '.') -> d.getPath)
+    assert(sets.map(_._1).toSet == declared.keySet)
+    for ((name, path) <- sets) {
+      val written = spark.read.parquet(path).schema
+      assert(written.fieldNames.sameElements(declared(name).fieldNames) &&
+        org.apache.spark.sql.types.DataType.equalsStructurally(written, declared(name),
+          ignoreNullability = true), s"$path: wrote $written, declares ${declared(name)}")
+    }
   }
 
   /** Non-vacuity guard for oracle-gated queries: a predicate that matches
